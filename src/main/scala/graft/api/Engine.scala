@@ -1,8 +1,16 @@
 package graft.api
 
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.io.LocalInputFile
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.types.StructType
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
 
 /** Read-side intent — the Spark analog of `HiveInputDescription`
   * (reference hive-io-exp-core input/HiveInputDescription.java:41-146):
@@ -55,6 +63,18 @@ case class WriteSpec(
   * (`p=v/`), so at 100 TB a partition-filtered read lists only matching
   * directories — no full scan, same contract as the reference's
   * metastore-side pruning.
+  *
+  * Table shape without a data scan (the reference takes the schema from
+  * the metastore and HiveStats sums stored numRows, HiveStats.java:
+  * 96-107): for a parquet table of at most
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` data files —
+  * Spark's own cutoff for listing on the driver — the data files are
+  * listed with java.nio and their parquet footers read on the driver.
+  * The first file's footer gives the data schema (Spark's inference
+  * reads the same file, with the same conversion, in a Spark job);
+  * the footers' row-group counts give [[stats]]' row count. Larger
+  * tables, other formats, schema-merging reads and tables with no data
+  * file take Spark's own path.
   */
 class Engine(spark: SparkSession, warehouse: String) {
 
@@ -87,7 +107,15 @@ class Engine(spark: SparkSession, warehouse: String) {
     * session (own SQLConf, shared SparkContext), so the parquet scan
     * itself produces ≈numSplits partitions and the plan carries no
     * Exchange. Works both directions: a small hint packs files together,
-    * a large hint splits row groups finer. */
+    * a large hint splits row groups finer.
+    *
+    * Building the frame starts no Spark job for a parquet table within
+    * the driver-listing cutoff: the data schema comes from the footer of
+    * its first data file in path order, read on the driver (see the
+    * class doc). With `mergeSchema`, above the cutoff, for other formats
+    * or with no data file, Spark infers the schema (a job for parquet;
+    * an empty table keeps Spark's "unable to infer schema" error).
+    * Partition columns are discovered from the directories either way. */
   def read(spec: TableSpec): DataFrame = {
     if (!tableExists(spec))
       throw new IllegalArgumentException(
@@ -100,12 +128,88 @@ class Engine(spark: SparkSession, warehouse: String) {
       s2.conf.set("spark.sql.files.openCostInBytes", "0")
       s2
     }
-    val rdr = reader(session, spec.format)
-    if (spec.mergeSchema) rdr.option("mergeSchema", "true")
-    var df = rdr.load(path(spec))
+    var df = load(session, spec)
     for (f <- spec.partitionFilter) df = df.filter(f)
     if (spec.columns.nonEmpty) df = df.select(spec.columns.map(col).toIndexedSeq: _*)
     df
+  }
+
+  /** The whole table as a frame, for [[read]] and [[rewrite]]. A parquet
+    * read without schema merging is handed the data schema from a footer
+    * read on the driver, so Spark skips its inference job. */
+  private def load(session: SparkSession, spec: TableSpec): DataFrame = {
+    val rdr = reader(session, spec.format)
+    if (spec.mergeSchema) rdr.option("mergeSchema", "true")
+    else footerSchema(session, spec).foreach(s => rdr.schema(s))
+    rdr.load(path(spec))
+  }
+
+  /** The data schema Spark's inference would give a non-merging parquet
+    * read: the footer of the first data file in path order
+    * (`ParquetUtils.inferSchema`), converted as `mergeSchemasInParallel`
+    * converts it — read here on the driver instead of in a job. */
+  private def footerSchema(session: SparkSession, spec: TableSpec): Option[StructType] = {
+    val conf = session.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled) None
+    else footerFiles(session, spec).flatMap(_.headOption).map { f =>
+      val converter = new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = conf.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+        nanosAsLong = conf.legacyParquetNanosAsLong)
+      ParquetFileFormat.readSchemaFromFooter(
+        new Footer(new org.apache.hadoop.fs.Path(f.toUri), readFooter(f)), converter)
+    }
+  }
+
+  /** Data files of a parquet table in sorted path order when the footer
+    * path applies: at most `parallelPartitionDiscovery.threshold` files
+    * and no parquet summary file (Spark's inference prefers those).
+    * `None` sends the caller to Spark's path. */
+  private def footerFiles(session: SparkSession, spec: TableSpec): Option[Seq[Path]] =
+    if (spec.format != "parquet") None
+    else listFiles(Paths.get(path(spec)),
+        session.sessionState.conf.parallelPartitionDiscoveryThreshold)
+      .filterNot(_.exists(isSummary))
+
+  /** Spark's file-source listing rule (`HadoopFSUtils
+    * .shouldFilterOutPathName`): names starting with `_` (unless a `k=v`
+    * directory) or `.`, and in-flight `._COPYING_` files, are not part of
+    * the table — except parquet summary files, which are listed. */
+  private def listed(name: String): Boolean =
+    !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) ||
+      name.startsWith("_metadata") || name.startsWith("_common_metadata")
+
+  /** A listed file the scan does not read (Spark's `isDataPath`). */
+  private def isSummary(f: Path): Boolean = f.getFileName.toString.startsWith("_")
+
+  /** The files Spark lists under `root`, recursively, in sorted path
+    * order — the order its inference takes the first file from
+    * (`ParquetUtils.splitFiles`). `None` if `root` is not a directory or
+    * once more than `limit` files are found. */
+  private def listFiles(root: Path, limit: Int = Int.MaxValue): Option[Seq[Path]] = {
+    val found = Vector.newBuilder[Path]
+    var n = 0
+    def visit(dir: Path): Boolean = {
+      val ls = Files.list(dir)
+      val entries = try ls.iterator().asScala.toVector finally ls.close()
+      entries.filter(p => listed(p.getFileName.toString)).forall { p =>
+        if (Files.isDirectory(p)) visit(p)
+        else { found += p; n += 1; n <= limit }
+      }
+    }
+    if (Files.isDirectory(root) && visit(root)) Some(found.result().sortBy(_.toString))
+    else None
+  }
+
+  /** Options from the context's loaded Hadoop conf: the no-argument
+    * `ParquetFileReader.open` builds a fresh Hadoop `Configuration` per
+    * call and parses its XML defaults, ~2-9 ms a footer. */
+  private def readFooter(f: Path): ParquetMetadata = {
+    val opts = HadoopReadOptions.builder(spark.sparkContext.hadoopConfiguration).build()
+    val r = ParquetFileReader.open(new LocalInputFile(f), opts)
+    try r.getFooter finally r.close()
   }
 
   /** Total on-disk bytes of a table (driver-side directory walk — the
@@ -246,9 +350,22 @@ class Engine(spark: SparkSession, warehouse: String) {
   }
 
   /** HiveStats parity (common/HiveStats.java:90-107): additive row count
-    * + byte size, from parquet footers instead of metastore params. */
-  def stats(spec: TableSpec): (Long, Long) =
-    (reader(spark, spec.format).load(path(spec)).count(), tableBytes(spec))
+    * + byte size. Bytes are every file under the table directory. For a
+    * parquet table within the driver-listing cutoff the row count is the
+    * sum of the row-group row counts in its data files' footers, read on
+    * the driver with no Spark job (the reference sums the metastore's
+    * stored numRows instead). Larger tables, other formats and tables
+    * with no data file run a `count()` job, and an empty table keeps
+    * Spark's "unable to infer schema" error. */
+  def stats(spec: TableSpec): (Long, Long) = {
+    val rows = footerFiles(spark, spec).filter(_.nonEmpty) match {
+      // zero-length files hold no rows and the scan skips them
+      case Some(files) => files.filter(Files.size(_) > 0)
+        .map(readFooter(_).getBlocks.asScala.map(_.getRowCount).sum).sum
+      case None => reader(spark, spec.format).load(path(spec)).count()
+    }
+    (rows, tableBytes(spec))
+  }
 
   /** hivetail parity (cmdline tailer/TailerCmd.java): bounded, ordered
     * sample of a table. */
@@ -310,17 +427,16 @@ class Engine(spark: SparkSession, warehouse: String) {
     require(partitionColumns(spec).isEmpty,
       s"compact/optimize support unpartitioned tables only; ${spec.table} is " +
         s"partitioned by ${partitionColumns(spec)} — run them per partition instead")
-    def dataFiles(dir: String): Seq[java.io.File] =
-      Option(new java.io.File(dir).listFiles()).toSeq.flatten
-        .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-    val before = dataFiles(p)
-    val bytes = before.map(_.length()).sum
-    val files = math.max(1, ((bytes + targetBytes - 1) / targetBytes).toInt)
-    writer(xform(reader(spark, spec.format).load(p), files), spec.format)
+    def files(dir: String): Seq[Path] =
+      listFiles(Paths.get(dir)).getOrElse(Nil).filterNot(isSummary)
+    val before = files(p)
+    val bytes = before.map(Files.size(_)).sum
+    val target = math.max(1, ((bytes + targetBytes - 1) / targetBytes).toInt)
+    writer(xform(load(spark, spec), target), spec.format)
       .mode(SaveMode.Overwrite).save(tmp)
     Files.move(Paths.get(p), Paths.get(bak))
     Files.move(Paths.get(tmp), Paths.get(p))
     rm(new java.io.File(bak))
-    (before.size, dataFiles(p).size)
+    (before.size, files(p).size)
   }
 }

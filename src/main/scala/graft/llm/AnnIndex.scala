@@ -161,16 +161,12 @@ object AnnIndex {
         s"""{"touched":[${touched.mkString(",")}]}""".getBytes("UTF-8"))
       finally out.close()
     }
-    val OverwriteModeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(OverwriteModeKey)
-    spark.conf.set(OverwriteModeKey, "dynamic")
-    try merged.repartition(col("cell")) // one file per rewritten cell
+    // per-write option: the session conf, and every concurrent write in
+    // the session, keep their own overwrite mode
+    merged.repartition(col("cell")) // one file per rewritten cell
       .write.mode("overwrite").partitionBy("cell")
+      .option("partitionOverwriteMode", "dynamic")
       .parquet(s"$dir/index")
-    finally prev match {
-      case Some(v) => spark.conf.set(OverwriteModeKey, v)
-      case None    => spark.conf.unset(OverwriteModeKey)
-    }
     if (injectCrashAfterOverwrite)
       throw new IllegalStateException(
         "injected crash: overwrite committed, emptied-cell sweep skipped")

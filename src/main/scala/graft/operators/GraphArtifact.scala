@@ -414,25 +414,30 @@ object GraphArtifact {
       buildUnlocked(s, items, clicks, outPath)
     }
 
+  /** The size-adaptive bucket count: one bucket per ~32 MB of a size
+    * estimate, clamped to [8, 4096] and rounded up to a power of two.
+    * The clamp is taken in `BigInt`: a Catalyst estimate of a join is a
+    * product and can exceed `Long.MaxValue`, and must get the most
+    * buckets, not wrap to the fewest. */
+  private[graft] def adaptiveBuckets(sizeInBytes: BigInt): Int = {
+    val clamped = (sizeInBytes / (32L << 20)).max(8).min(4096).toInt
+    Integer.highestOneBit(clamped) * (if (Integer.bitCount(clamped) == 1) 1 else 2)
+  }
+
   private def buildUnlocked(s: SparkSession, items: DataFrame,
                             clicks: DataFrame, outPath: String): Unit = {
-    // Bucket count: conf wins; otherwise SIZE-ADAPTIVE — one bucket per
-    // ~32 MB of the incidence frame's Catalyst size estimate, power of
-    // two, clamped to [8, 4096] (round 15; previously a flat 32 tuned
-    // to neither the fixtures nor a cluster). The count is a LAYOUT
+    // Bucket count: conf wins; otherwise SIZE-ADAPTIVE from the incidence
+    // frame's Catalyst size estimate ([[adaptiveBuckets]]; round 15,
+    // previously a flat 32 tuned to neither the fixtures nor a
+    // cluster). The count is a LAYOUT
     // property recorded in _meta/state.json: append and serve read it
     // from the meta, and the base+append ≡ full law is bucket-agnostic
     // (GraphArtifactSpec runs it at 8 vs 32), so the rule only moves
     // file counts — small fixtures stop paying 32-way small-file
     // overhead per sub-table, 100 TB corpora get enough buckets that a
     // batch append's touched-bucket reads stay a small fraction.
-    val n = s.conf.getOption(BucketsKey).map(_.toInt).getOrElse {
-      val bytes = items.queryExecution.optimizedPlan.stats.sizeInBytes
-      val target = (bytes / (32L << 20)).toLong
-      val clamped = math.min(4096L, math.max(8L, target))
-      Integer.highestOneBit(clamped.toInt) *
-        (if (Integer.bitCount(clamped.toInt) == 1) 1 else 2)
-    }
+    val n = s.conf.getOption(BucketsKey).map(_.toInt).getOrElse(
+      adaptiveBuckets(items.queryExecution.optimizedPlan.stats.sizeInBytes))
     val fs = fsOf(s, outPath)
     val live = new Path(outPath)
     val staging = new Path(outPath + ".staging")

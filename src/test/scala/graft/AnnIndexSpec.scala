@@ -103,6 +103,15 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(!fs.exists(lease))
   }
 
+  test("append leaves the session conf as it found it") {
+    val emb = Tables.t(spark, sf, "embeddings")
+    val d = java.nio.file.Files.createTempDirectory("ann-conf").toString
+    AnnIndex.build(emb.filter(col("vec_id") < 350), d)
+    val before = spark.conf.getAll
+    AnnIndex.append(emb.filter(col("vec_id") >= 350), d)
+    assert(spark.conf.getAll === before)
+  }
+
   test("append under the frozen model equals a full rebuild with that model") {
     val emb = Tables.t(spark, sf, "embeddings")
     val base = emb.filter(col("vec_id") < 350)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -400,6 +401,116 @@ class EngineSpec extends AnyFunSuite {
     val (_, after) = e.optimize(spec, zorderBy = Seq("a", "b"))
     assert(after <= 1)
     assert(e.read(spec).count() === 0)
+  }
+
+  /** One table of every shape the spec writes, in one warehouse. */
+  private def shapes(): (String, Engine, Seq[TableSpec]) = {
+    val wh = Files.createTempDirectory("graft-wh").toString
+    val e = new Engine(spark, wh)
+    val part = TableSpec("s_part")
+    e.write(part, Seq((1, 1.1), (2, 2.2)).toDF("i1", "d1"), WriteSpec(Map("ds" -> "a")))
+    e.write(part, Seq((3, 3.3)).toDF("i1", "d1"), WriteSpec(Map("ds" -> "b")))
+    val flat = TableSpec("s_flat")
+    e.write(flat, Seq((1, 1.1, "x"), (2, 2.2, "y")).toDF("i1", "d1", "s1"))
+    val cplx = TableSpec("s_cplx")
+    e.write(cplx, Seq(
+      ComplexRow(1L, Seq(1L, 2L), Map("a" -> 1.0f), Inner("x", 7)),
+      ComplexRow(2L, Seq.empty, Map.empty, Inner("y", 8))).toDS().toDF())
+    val union = TableSpec("s_union")
+    e.write(union, Seq((1L, 42L)).toDF("id", "v").select(col("id"),
+      graft.api.UnionType.create(0, col("v"), LongType, StringType).as("u")))
+    val nulls = TableSpec("s_nulls")
+    e.write(nulls, spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(
+        org.apache.spark.sql.Row(1, null), org.apache.spark.sql.Row(null, 2.2))),
+      StructType(Seq(StructField("i1", IntegerType), StructField("d1", DoubleType)))))
+    val empty = TableSpec("s_empty")
+    e.write(empty, spark.range(0, 10).toDF("a").filter(col("a") < 0))
+    val frag = TableSpec("s_frag")
+    e.write(frag, spark.range(0, 1000).toDF("i1").repartition(16))
+    val evo = TableSpec("s_evo")
+    e.write(evo, Seq((1, 1.1)).toDF("i1", "d1"), WriteSpec(Map("ds" -> "a")))
+    e.write(evo, Seq((2, 2.2, "x")).toDF("i1", "d1", "s1"),
+      WriteSpec(Map("ds" -> "b"), allowNewColumns = true))
+    (wh, e, Seq(part, flat, cplx, union, nulls, empty, frag, evo))
+  }
+
+  private def assertShapeMatchesSpark(wh: String, e: Engine, spec: TableSpec): Unit = {
+    val p = s"$wh/${spec.database}/${spec.table}"
+    assert(e.read(spec).schema === spark.read.parquet(p).schema, spec.table)
+    assert(e.stats(spec)._1 === spark.read.parquet(p).count(), spec.table)
+  }
+
+  test("footer schema and row count equal Spark's inference and count()") {
+    val (wh, e, specs) = shapes()
+    val frag = Files.list(java.nio.file.Paths.get(wh, "default", "s_frag"))
+    try assert(frag.filter(_.getFileName.toString.endsWith(".parquet")).count() >= 16)
+    finally frag.close()
+    specs.foreach(assertShapeMatchesSpark(wh, e, _))
+    // the evolved table's first file in path order lacks s1, as Spark's does
+    assert(!e.read(TableSpec("s_evo")).columns.contains("s1"))
+  }
+
+  test("above the driver-listing cutoff read and stats take Spark's path") {
+    val (wh, e, specs) = shapes()
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    spark.conf.set(key, "1")
+    try specs.foreach(assertShapeMatchesSpark(wh, e, _))
+    finally spark.conf.unset(key)
+  }
+
+  test("a parquet summary file keeps Spark's schema inference") {
+    val wh = Files.createTempDirectory("graft-wh").toString
+    val e = new Engine(spark, wh)
+    e.write(TableSpec("wide"), Seq((1, 1.1, "x")).toDF("i1", "d1", "s1"))
+    val narrow = TableSpec("narrow")
+    e.write(narrow, Seq((2, 2.2), (3, 3.3)).toDF("i1", "d1"))
+    // any parquet file serves as a summary: Spark's inference prefers
+    // `_common_metadata` over the data files, and the scan skips it
+    val wideFile = Files.list(java.nio.file.Paths.get(wh, "default", "wide"))
+    val src = try wideFile.filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get
+      finally wideFile.close()
+    Files.copy(src, java.nio.file.Paths.get(wh, "default", "narrow", "_common_metadata"))
+    assert(spark.read.parquet(s"$wh/default/narrow").columns.contains("s1"))
+    assertShapeMatchesSpark(wh, e, narrow)
+  }
+
+  /** Spark jobs started while `body` runs. Listener events arrive in
+    * order, so once a marker job started after `body` has been seen,
+    * every job `body` started has been counted. */
+  private def jobsDuring(body: => Unit): Int = {
+    val descs = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        descs.put(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      spark.sparkContext.setJobDescription("jobsDuring-marker")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      var n = 0
+      var d = descs.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (d != null && d != "jobsDuring-marker") {
+        n += 1; d = descs.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      assert(d != null, "marker job never reached the listener")
+      n
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("read and stats of a small parquet table start no Spark job") {
+    val e = freshEngine()
+    val spec = TableSpec("tjobs")
+    e.write(spec, Seq((1, 1.1), (2, 2.2)).toDF("i1", "d1"), WriteSpec(Map("ds" -> "a")))
+    e.write(spec, Seq((3, 3.3)).toDF("i1", "d1"), WriteSpec(Map("ds" -> "b")))
+    var rows = 0L
+    assert(jobsDuring { e.read(spec); rows = e.stats(spec)._1 } === 0)
+    assert(rows === 3)
+    // the listener does see jobs: a schema-merging read still infers in one
+    assert(jobsDuring { e.read(spec.copy(mergeSchema = true)) } > 0)
   }
 
   test("compact merges fragmented files without changing content") {

@@ -53,6 +53,17 @@ class GraphArtifactSpec extends AnyFunSuite {
 
   private def noClicks = Seq.empty[(Long, Long)].toDF("u", "v")
 
+  test("adaptive bucket count clamps in BigInt and keeps powers of two") {
+    val mb32 = BigInt(32L << 20)
+    assert(GraphArtifact.adaptiveBuckets(BigInt(2).pow(100)) === 4096)
+    assert(GraphArtifact.adaptiveBuckets(BigInt(Long.MaxValue) * 4) === 4096)
+    assert(GraphArtifact.adaptiveBuckets(0) === 8)
+    for (k <- Iterator.iterate(8)(_ * 2).takeWhile(_ <= 4096))
+      assert(GraphArtifact.adaptiveBuckets(mb32 * k) === k)
+    assert(GraphArtifact.adaptiveBuckets(mb32 * 9) === 16)
+    assert(GraphArtifact.adaptiveBuckets(mb32 * 5000) === 4096)
+  }
+
   test("served co-purchase edges equal the inline derivation") {
     val inline = GraphArtifact.coPurchaseInline(spark, sf)
       .as[(Long, Long)].collect().toSet
